@@ -25,6 +25,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from polygon_algotrading_env_spark.operators.adjust import adjust_prices
@@ -98,13 +99,22 @@ def ingest_aggregates(
       symbol, per-symbol bookmark watermarks shipped to executors as a
       serialized option, no driver-side row list. A month × 5000-ticker
       backfill never fits a driver list; this route is why.
+
+    The publish tail reads the source ONCE per call. The landed increment
+    is pinned (memory, spilling to disk) and the pin is released in a
+    ``finally`` before the call returns or raises, so nothing outlives it.
+    One per-(ticker, adjusted) ``max(t)`` aggregate fills the pin and does
+    two jobs: an empty result is the empty-increment early return, and
+    its rows are the fresh watermarks merged into the bookmarks. Bronze,
+    silver and the bookmarks are then all published from the pin; the
+    bookmark table is read once, at the start of the call. The returned
+    silver frame stays lazy over the source: a caller that acts on it
+    re-reads the source (with the watermarks as they were at the start).
     """
     store = BookmarkStore(f"{lake_root}/bookmarks", key_cols=["ticker", "adjusted"])
     bookmarks = store.load(spark)
-    wm_by_symbol: dict[str, int] = {}
-    if bookmarks is not None:
-        for r in bookmarks.filter(F.col("adjusted") == adjusted).collect():
-            wm_by_symbol[r["ticker"]] = r["max_ts"]
+    marks = bookmarks.collect() if bookmarks is not None else []
+    wm_by_symbol = {r["ticker"]: r["max_ts"] for r in marks if r["adjusted"] == adjusted}
 
     if page_store is not None:
         import json as _json
@@ -120,15 +130,12 @@ def ingest_aggregates(
             .option("symbols", ",".join(symbols))
             .option("lastentrybysymbol", _json.dumps(wm_by_symbol))
             .load()
-            .withColumn("adjusted", F.lit(adjusted))
         )
-        if landed.isEmpty():
-            return landed
     else:
         if fetch_page is None:
             raise ValueError("provide fetch_page (API loop) or page_store (backfill)")
         all_rows: list[dict] = []
-        for sym in symbols:  # API-bound loop: the reference's fan-out (J1)
+        for sym in dict.fromkeys(symbols):  # API-bound loop: the reference's fan-out (J1)
             rows = paginate_date_cursor(
                 lambda from_date, sym=sym: fetch_page(sym, from_date),
                 start_date,
@@ -137,21 +144,22 @@ def ingest_aggregates(
                 last_entry_ts=wm_by_symbol.get(sym),
             )
             all_rows.extend({**r, "ticker": sym} for r in rows)
+        landed = land_records(spark, all_rows, CANDLE_SCHEMA)
 
-        if not all_rows:
-            return spark.createDataFrame([], CANDLE_SCHEMA).withColumn(
-                "adjusted", F.lit(adjusted)
-            )
-        landed = land_records(spark, all_rows, CANDLE_SCHEMA).withColumn(
-            "adjusted", F.lit(adjusted)
-        )
-
-    write_bronze(landed, f"{lake_root}/bronze/candles")
-
-    silver = dedup_keep_first(landed, keys=["ticker", "adjusted", "t"], order_col="t")
-    write_partitioned(silver, f"{lake_root}/silver/candles", ["adjusted", "ticker"])
-    store.update(landed, "t")
-    return silver
+    landed = landed.withColumn("adjusted", F.lit(adjusted)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        maxima = landed.groupBy("ticker", "adjusted").agg(F.max("t").alias("t")).collect()
+        if not maxima:
+            return landed
+        write_bronze(landed, f"{lake_root}/bronze/candles")
+        silver = dedup_keep_first(landed, keys=["ticker", "adjusted", "t"], order_col="t")
+        write_partitioned(silver, f"{lake_root}/silver/candles", ["adjusted", "ticker"])
+        store.update(maxima, "t", current=marks)
+        return silver
+    finally:
+        landed.unpersist()
 
 
 def build_gold_bars(

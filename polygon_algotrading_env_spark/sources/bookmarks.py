@@ -20,7 +20,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+
+from polygon_algotrading_env_spark.fsutil import hadoop_path_exists
 
 
 class BookmarkStore:
@@ -32,10 +34,12 @@ class BookmarkStore:
         self.ts_col = ts_col
 
     def load(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.path)
-        except Exception:  # first run: no bookmark yet
+        """The watermark table, or None before the first update. Absence
+        is probed explicitly: a read that fails must raise, not pass for a
+        first run, which would reset every watermark."""
+        if not hadoop_path_exists(spark, self.path):
             return None
+        return spark.read.parquet(self.path)
 
     def filter_new(self, incoming: DataFrame, event_ts_col: str) -> DataFrame:
         """Keep only rows strictly newer than the stored per-key watermark
@@ -54,26 +58,42 @@ class BookmarkStore:
             .drop("__wm")
         )
 
-    def update(self, incoming: DataFrame, event_ts_col: str) -> None:
+    def update(
+        self,
+        incoming: DataFrame | Sequence[Row],
+        event_ts_col: str,
+        current: Sequence[Row] | None = None,
+    ) -> None:
         """Merge max(event_ts) per key into the store (idempotent: re-runs
-        with the same data leave watermarks unchanged)."""
-        spark = incoming.sparkSession
-        fresh = incoming.groupBy(*self.key_cols).agg(
-            F.max(event_ts_col).alias(self.ts_col)
-        )
-        old = self.load(spark)
-        if old is not None:
-            merged = (
-                old.select(*self.key_cols, self.ts_col)
-                .unionByName(fresh)
-                .groupBy(*self.key_cols)
-                .agg(F.max(self.ts_col).alias(self.ts_col))
+        with the same data leave watermarks unchanged).
+
+        ``incoming`` is a frame of events, or per-key maxima the caller has
+        already collected as rows of (key cols..., ``event_ts_col``): a max
+        of maxima is the same max, so both merge alike. ``current`` is the
+        store's rows as the caller already read them; when omitted, the
+        store is read here."""
+        spark = SparkSession.active()
+        if isinstance(incoming, DataFrame):
+            incoming = (
+                incoming.groupBy(*self.key_cols)
+                .agg(F.max(event_ts_col).alias(event_ts_col))
+                .collect()
             )
-        else:
-            merged = fresh
-        out = merged.withColumn("updated_at", F.current_timestamp())
-        # Small table: collect-and-rewrite avoids read/write path conflicts.
-        rows = out.collect()
-        spark.createDataFrame(rows, out.schema).coalesce(1).write.mode(
+        if current is None:
+            old = self.load(spark)
+            current = old.collect() if old is not None else []
+        marks: dict[tuple, object] = {}
+        for rows, ts_col in ((current, self.ts_col), (incoming, event_ts_col)):
+            for r in rows:
+                key, ts = tuple(r[k] for k in self.key_cols), r[ts_col]
+                if ts is not None and (key not in marks or ts > marks[key]):
+                    marks[key] = ts
+        if not marks:
+            return
+        # The table is a few rows, built from local values: overwriting it
+        # reads nothing back.
+        spark.createDataFrame(
+            [(*key, ts) for key, ts in marks.items()], [*self.key_cols, self.ts_col]
+        ).withColumn("updated_at", F.current_timestamp()).coalesce(1).write.mode(
             "overwrite"
         ).parquet(self.path)

@@ -269,7 +269,9 @@ class PolygonPagesReader(DataSourceReader):
         }
 
     def partitions(self):
-        symbols = self.symbols or self.store.list_symbols()
+        # One partition per DISTINCT symbol: a repeated entry in the
+        # option would land that symbol's rows twice.
+        symbols = dict.fromkeys(self.symbols or self.store.list_symbols())
         return [SymbolPartition(s) for s in symbols]
 
     def read(self, partition: SymbolPartition) -> Iterator[tuple]:

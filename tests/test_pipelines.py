@@ -10,6 +10,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from polygon_algotrading_env_spark.pipelines import (
     build_gold_bars,
@@ -173,6 +174,80 @@ def test_aggregates_backfill_routes_to_distributed_source(spark, tmpdir):
     # Full backfill + increment landed in the partitioned silver lake.
     lake = spark.read.parquet(f"{tmpdir}/lake/silver/candles")
     assert lake.filter("ticker = 'SPY'").count() == 9
+
+
+def test_backfill_reads_page_store_once(spark, tmpdir, scanned_rows):
+    """One ingest parses each landed row once: bronze, silver and the
+    bookmarks all publish from one scan of the page store."""
+    symbols = ["SPY", "TLT", "GLD"]
+    _write_page_store(f"{tmpdir}/pages", symbols, days_per_symbol=7)
+    ingest_aggregates(
+        spark, symbols, None, f"{tmpdir}/lake", "1970-01-01", "1970-01-31",
+        page_store=f"{tmpdir}/pages",
+    )
+    landed = spark.read.parquet(f"{tmpdir}/lake/bronze/candles").count()
+    assert landed == 21
+    assert scanned_rows("BatchScan polygon_pages") == landed
+
+
+def _pinned_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_ingest_pin_never_outlives_the_call(spark, tmpdir):
+    """The pinned increment is released on every exit: after a publish,
+    after the empty-increment early return, and when a publish step
+    raises. Compared with the pins held before each call, since other
+    tests share the session."""
+    symbols = ["SPY", "TLT"]
+    store, lake = f"{tmpdir}/pages", f"{tmpdir}/lake"
+    _write_page_store(store, symbols, days_per_symbol=7)
+
+    def ingest(lake_root):
+        return ingest_aggregates(
+            spark, symbols, None, lake_root, "1970-01-01", "1970-01-31",
+            page_store=store,
+        )
+
+    before = _pinned_rdds(spark)
+    silver = ingest(lake)
+    assert _pinned_rdds(spark) == before
+    # The returned frame re-reads the source when acted on, unpinned.
+    assert silver.count() == 14
+    assert _pinned_rdds(spark) == before
+
+    bronze_rows = spark.read.parquet(f"{lake}/bronze/candles").count()
+    marks = sorted(spark.read.parquet(f"{lake}/bookmarks").collect())
+    assert ingest(lake).count() == 0
+    assert _pinned_rdds(spark) == before
+    assert spark.read.parquet(f"{lake}/bronze/candles").count() == bronze_rows
+    assert sorted(spark.read.parquet(f"{lake}/bookmarks").collect()) == marks
+
+    blocked = f"{tmpdir}/blocked"
+    os.makedirs(f"{blocked}/bronze")
+    with open(f"{blocked}/bronze/candles", "w") as f:
+        f.write("not a directory")
+    with pytest.raises(Py4JJavaError):
+        ingest(blocked)
+    assert _pinned_rdds(spark) == before
+
+
+def test_repeated_symbol_lands_once(spark, tmpdir):
+    """A symbol listed twice is read once on both routes: bronze holds
+    each unique candle once."""
+    _write_page_store(f"{tmpdir}/pages", ["SPY", "TLT"], days_per_symbol=7)
+    ingest_aggregates(
+        spark, ["SPY", "SPY", "TLT"], None, f"{tmpdir}/store-lake", "1970-01-01",
+        "1970-01-31", page_store=f"{tmpdir}/pages",
+    )
+    fetch = _fake_polygon(["SPY", "TLT"], minutes_per_symbol=7, page_rows=3)
+    ingest_aggregates(
+        spark, ["SPY", "SPY", "TLT"], fetch, f"{tmpdir}/api-lake", "1970-01-01",
+        "1970-01-31", page_limit=3,
+    )
+    for lake in ("store-lake", "api-lake"):
+        bronze = spark.read.parquet(f"{tmpdir}/{lake}/bronze/candles")
+        assert bronze.count() == bronze.select("ticker", "t").distinct().count() == 14
 
 
 def test_gold_bars_ladder_and_indicators(spark):

@@ -4,6 +4,7 @@ import shutil
 import tempfile
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from polygon_algotrading_env_spark.sources.bookmarks import BookmarkStore
 from polygon_algotrading_env_spark.sources.readers import (
@@ -229,6 +230,17 @@ def test_bookmark_roundtrip_and_monotonicity(spark, tmpdir):
     store.update(batch1, "t")
     wm2 = {r["ticker"]: r["max_ts"] for r in store.load(spark).collect()}
     assert wm2 == wm
+
+
+def test_bookmark_load_raises_on_unreadable_table(spark, tmpdir):
+    """Only a missing table means "no bookmark yet": a path that exists but
+    does not read as parquet raises instead of resetting the watermarks."""
+    store = BookmarkStore(f"{tmpdir}/bm", key_cols=["ticker"])
+    assert store.load(spark) is None
+    with open(f"{tmpdir}/bm", "w") as f:
+        f.write("not parquet")
+    with pytest.raises(Py4JJavaError):
+        store.load(spark)
 
 
 def test_write_jsonl_sharded_stable_and_readable(spark, tmpdir):
